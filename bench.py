@@ -84,21 +84,17 @@ def main() -> None:
     # warm sample).
     import shutil
     import statistics
-    import tempfile
 
     n_files = max(200, int(2_000_000 * sf))
     n_samples = max(1, int(os.environ.get("SPARK_GRAFT_KG_SAMPLES", "3")))
     samples: list[float] = []
     n_triples = 0
     for _ in range(n_samples):
-        store_dir = tempfile.mkdtemp(prefix="bench_assets")
         t0 = time.time()
-        res = run_pipeline(
-            spark, n_files=n_files, partitions=4 * cpus, asset_store_dir=store_dir
-        )
+        res = run_pipeline(spark, n_files=n_files, partitions=4 * cpus)
         n_triples = res["triples"].count()
         samples.append(round(time.time() - t0, 3))
-        shutil.rmtree(store_dir, ignore_errors=True)
+        shutil.rmtree(res["assets"].path, ignore_errors=True)
     kg_min = min(samples)
     kg_median = round(statistics.median(samples), 3)
     times["kg_pipeline"] = kg_min

@@ -202,7 +202,6 @@ def run_plans(out_dir: str = "plans/r06", suffix: str = "before") -> None:
 
 def run_kg(n_files: int, n_samples: int = 3) -> None:
     import shutil
-    import tempfile
 
     from sling_spark.kg.pipeline import run_pipeline
 
@@ -211,13 +210,11 @@ def run_kg(n_files: int, n_samples: int = 3) -> None:
     n_triples = 0
     probe0 = {"burn_s": _timed_burn(), "dram_gbs": _mem_bw()}
     for _ in range(n_samples):
-        store_dir = tempfile.mkdtemp(prefix="bx_assets")
         t0 = time.time()
-        res = run_pipeline(spark, n_files=n_files, partitions=4 * cpus,
-                           asset_store_dir=store_dir)
+        res = run_pipeline(spark, n_files=n_files, partitions=4 * cpus)
         n_triples = res["triples"].count()
         samples.append(round(time.time() - t0, 3))
-        shutil.rmtree(store_dir, ignore_errors=True)
+        shutil.rmtree(res["assets"].path, ignore_errors=True)
     probe1 = {"burn_s": _timed_burn(), "dram_gbs": _mem_bw()}
     print(json.dumps({
         "mode": "kg", "n_files": n_files, "samples": samples,

@@ -2161,13 +2161,11 @@ def q_kg_phrase_structure(spark, sf_dir):
     foundation, developed-by). Oracle: the shared scalar analyzer run
     driver-side over the INDEPENDENT oracle's mentions + phrase table +
     fact closure."""
-    from .kg.assets import build_assets, seed_dataframes
     from .kg.phrase_structure import phrase_structure
     from .kg.pipeline import run_pipeline
 
     res = run_pipeline(spark, n_files=40)
-    assets_bc, _ = build_assets(spark, res["doc_stats"], seed_dataframes(spark))
-    return phrase_structure(res["mentions"], assets_bc).distinct()
+    return phrase_structure(res["mentions"], res["assets"]).distinct()
 
 
 def _sql_phrase_structure() -> str:
@@ -2495,7 +2493,7 @@ def q_kg_stream_triples(spark, sf_dir):
     this query shares kg_triples' independent-oracle VALUES gold."""
     import tempfile
 
-    from .kg.assets import build_assets, seed_dataframes
+    from .kg.assets import build_asset_store, seed_dataframes
     from .kg.documents import build_documents, latest_versions
     from .kg.reconcile import (
         invert_statements,
@@ -2520,17 +2518,19 @@ def q_kg_stream_triples(spark, sf_dir):
     full = latest_versions(corpus_df(spark, 40, partitions=4)).persist()
     try:
         seed = seed_dataframes(spark)
-        assets_bc, _ = build_assets(spark, build_documents(full), seed)
+        store, _ = build_asset_store(
+            spark, build_documents(full), f"{tmp}/assets", seed
+        )
 
         # increment 1: half the files; increment 2: the rest
         full.filter(F.xxhash64("path") % 2 == 0).write.parquet(src)
         run_to_parquet(
-            stream_triples(annotate_stream(read_corpus_stream(spark, src), assets_bc)),
+            stream_triples(annotate_stream(read_corpus_stream(spark, src), store)),
             out, ckpt,
         )
         full.filter(F.xxhash64("path") % 2 != 0).write.mode("append").parquet(src)
         run_to_parquet(
-            stream_triples(annotate_stream(read_corpus_stream(spark, src), assets_bc)),
+            stream_triples(annotate_stream(read_corpus_stream(spark, src), store)),
             out, ckpt,
         )
 

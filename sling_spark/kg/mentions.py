@@ -23,11 +23,11 @@ resolver.cc, sling/nlp/silver/relations.cc), per sentence unit:
 The reference runs these as ONE annotator chain per document
 (silver.py:105-169); we do the same: ONE Arrow-batched mapInPandas pass
 emits mention rows and relation rows together (a `kind` column splits
-them), with the phrase table / IDF / links / popularity / facts either
-broadcast or loaded worker-side from a Parquet asset store
-(assets.AssetStore) — both analogs of SLING memory-mapping its
-repository files per worker (sling/file/repository.h:30-60). No shuffle
-anywhere in the annotation path.
+them), with the phrase table / IDF / links / popularity / facts loaded
+worker-side from the Parquet asset store (assets.AssetStore) — the
+analog of SLING memory-mapping its repository files per worker
+(sling/file/repository.h:30-60). No shuffle anywhere in the annotation
+path.
 
 Execution split (round-2 vectorization): candidate-span ENUMERATION
 (SpanPopulator + pruners + the literal date/number/measure annotators)
@@ -89,7 +89,8 @@ PRONOUNS = set(PRONOUN_GENDER)
 
 @dataclass
 class KbAssets:
-    """Broadcast-side lookup structures (all dimension-sized)."""
+    """Annotator lookup structures (all dimension-sized), built per
+    worker process by assets.load_assets."""
 
     phrase_table: dict[int, list[tuple]]  # fp -> [(entity, count, form, reliable)]
     idf: dict[int, float]  # token fp -> idf
@@ -431,7 +432,7 @@ def _literal_candidates(
 class _NpAssets:
     """Executor-side derived lookup arrays: sorted key arrays for the
     vectorized membership/IDF probes plus the per-entity ordered-facts
-    cache (pure function of the broadcast assets, so safe to share
+    cache (pure function of the loaded assets, so safe to share
     across documents/batches within a Python worker)."""
 
     __slots__ = ("pt_keys", "idf_keys", "idf_vals", "ordered_facts")
@@ -880,13 +881,14 @@ def _annotate_from_candidates(
 
 def annotate(
     documents: DataFrame,
-    assets_bc,
+    store,
     min_idf: float = DEFAULT_MIN_IDF,
     max_span: int = DEFAULT_MAX_SPAN,
 ) -> DataFrame:
-    """documents → unified annotation rows (kind = mention | relation).
-    Narrow transformation — no shuffle; split with mentions_of/
-    relations_of (one cached pass serves both)."""
+    """documents → unified annotation rows (kind = mention | relation),
+    with the KB assets of ``store`` (an ``assets.AssetStore``). Narrow
+    transformation — no shuffle; split with mentions_of/relations_of
+    (one cached pass serves both)."""
 
     cols = ["kind", "repo", "path", "commit", "content_sha",
             "sentence", "begin", "end", "phrase", "fp",
@@ -894,12 +896,9 @@ def annotate(
 
     def run(batches):
         from ..functions.tokenize import tokenize_arrays
-        from .assets import resolve_assets
+        from .assets import load_assets
 
-        # the broadcast carries either the materialized KbAssets or an
-        # AssetStore handle (Parquet-backed lazy loading — the scale
-        # path for a KB that outgrows driver collect/broadcast)
-        assets = resolve_assets(assets_bc.value)
+        assets = load_assets(store)
         npa = _np_assets(assets)
         for pdf in batches:
             data = {c: [] for c in cols}
@@ -1003,12 +1002,12 @@ def relations_of(annotations: DataFrame) -> DataFrame:
 
 def detect_mentions(
     documents: DataFrame,
-    assets_bc,
+    store,
     min_idf: float = DEFAULT_MIN_IDF,
     max_span: int = DEFAULT_MAX_SPAN,
 ) -> DataFrame:
     """Mentions only (the standalone stage used by tests/queries)."""
-    return mentions_of(annotate(documents, assets_bc, min_idf, max_span))
+    return mentions_of(annotate(documents, store, min_idf, max_span))
 
 
 def annotate_text(text: str, assets: KbAssets) -> dict:

@@ -8,7 +8,8 @@ Reference semantics:
   stores, per fp, entity entries sorted for lookup
   (sling/nlp/kb/phrase-table-builder.cc:36-237); the table records its
   normalization ("lcn", builder :105-107) and is memory-mapped by every
-  annotator worker — our analog is a Spark broadcast dict.
+  annotator worker — our analog is the phrase_table Parquet table of the
+  asset store (kg/assets.py), which each worker reads once per process.
 
 Plan shape: one applyInPandas per entity (tiny groups) for variant
 folding, then one hash aggregation by fp. Both shuffles are on keys with
@@ -206,7 +207,13 @@ def select_aliases(
 def build_phrase_table(selected: DataFrame) -> DataFrame:
     """fp → sorted candidate list. Entries per (fp, entity) are merged
     (counts summed, majority form), then sorted by (count desc, entity)
-    as the lookup order (phrase-table-builder.cc:100-170 Flush)."""
+    as the lookup order (phrase-table-builder.cc:100-170 Flush).
+
+    The table is dimension-sized (items/aliases), not corpus-sized; at
+    100 TB corpus it is still ~GBs, so it never goes through the driver:
+    assets.build_asset_store writes it as Parquet and workers load it
+    lazily (assets.load_assets), the phrase-table.h:60-62 Acquire
+    analog."""
     per_entity = selected.groupBy("fp", "entity").agg(
         F.sum("count").cast("int").alias("count"),
         F.max_by("form", "count").alias("form"),
@@ -255,27 +262,3 @@ def build_name_table(selected: DataFrame) -> DataFrame:
         .orderBy("name")
     )
 
-
-def phrase_table_dict(phrase_table: DataFrame) -> dict[int, list[tuple]]:
-    """Collect the phrase table into a broadcastable dict
-    {fp: [(entity, count, form, reliable), ...]} — the analog of
-    memory-mapping the phrase-table repository on every worker
-    (sling/nlp/kb/phrase-table.h:60-62 Acquire).
-
-    The KB-side tables are dimension-sized (items/aliases), not
-    corpus-sized; at 100 TB corpus the phrase table is still ~GBs.
-    A table that outgrows driver collect/broadcast uses the Parquet-
-    backed worker-side store instead (assets.build_asset_store /
-    AssetStore): no driver materialization at all — workers lazily read
-    the Parquet per process, the repository memory-map analog.
-    """
-    rows = phrase_table.collect()
-    out: dict[int, list[tuple]] = {}
-    for r in rows:
-        entries = [
-            (e["entity"], e["count"], e["form"], e["reliable"]) for e in r["entries"]
-        ]
-        # deterministic lookup order: count desc, entity asc
-        entries.sort(key=lambda t: (-t[1], t[0]))
-        out[r["fp"]] = entries
-    return out

@@ -4,9 +4,10 @@ Stage DAG (SURVEY.md §7):
 
     corpus ─ documents(raw) ─┬─ doc_stats ─ idf ─┐
                              │                   ├─ mentions ─ relations ─ doc_triples
-    seed aliases ─ select ─ phrase_table ────────┘  (phrase-table branch │
-                   runs on a second job-submitter thread, overlapping   │
-                   the corpus stages)                                    │
+    seed KB ─ asset store ───────────────────────┘  (5 KB tables, written │
+                                                    on background        │
+                                                    threads, overlapping │
+                                                    the corpus stages)   │
     seed same_as ─ xref clusters ──┬─ canonicalized triples ─────────────┤
     seed items + fragments ─ (+ inverse-property fragments)              │
                   ─ reconcile/merge ─ kb_items ─ kb_triples ─────────────┴─ triples
@@ -16,8 +17,10 @@ Stage DAG (SURVEY.md §7):
     stages cost a fixed ~6s at ANY corpus size / core count)
 
 (Synthetic, checkpoint-less runs replace the corpus→documents pair with
-the zero-shuffle `synthetic_documents` generator; asset consumption is
-either broadcast dicts or the Parquet-backed AssetStore.)
+the zero-shuffle `synthetic_documents` generator.) Annotator assets
+reach the workers one way only: written once as a Parquet AssetStore
+(kg/assets.py) whose handle the annotate UDF closes over; each worker
+loads it once per process.
 
 Checkpointing (north rule "resumable from per-partition checkpoint"):
 every materialized stage is written to ``<dir>/<stage>`` as Parquet; a
@@ -36,7 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.corpus import corpus_df
-from .assets import build_assets, phrase_table_future, seed_dataframes  # noqa: F401
+from . import assets
+from .assets import seed_dataframes
 from .documents import doc_stats, latest_with_sha
 from .mentions import annotate, mentions_of, relations_of
 from .reconcile import invert_statements, kb_triples, merge_items, reconcile_items
@@ -77,25 +81,24 @@ def run_pipeline(
     partitions: int | None = None,
     seed: dict[str, DataFrame] | None = None,
     asset_store_dir: str | None = None,
-) -> dict[str, DataFrame]:
-    """Run the full pipeline; returns every stage output by name.
+) -> dict:
+    """Run the full pipeline; returns every stage output by name, plus
+    the annotator ``assets`` handle (an ``assets.AssetStore``) for
+    downstream annotators such as phrase_structure.
 
     ``seed`` injects a different KB (e.g. wikidata-importer output) in
-    place of the seed fixtures; ``asset_store_dir`` switches annotator
-    assets to the Parquet-backed worker-side store (no driver collect —
-    the path for a KB that outgrows broadcast)."""
+    place of the seed fixtures. ``asset_store_dir`` is the
+    worker-visible directory the annotator assets are written to;
+    without it they go to ``<checkpoint_dir>/assets``, or on a local
+    master to a fresh temp dir (``assets.store_dir_for``)."""
     seed = seed or seed_dataframes(spark)
-    # corpus-independent branches start immediately: their jobs
+    # the corpus-independent asset writes start immediately: their jobs
     # interleave with the corpus/documents/stats stages below (separate
     # job-submitter threads; Spark submission is thread-safe)
-    pt_future = None
-    store_future = None
-    if asset_store_dir:
-        from .assets import asset_store_future
-
-        store_future = asset_store_future(spark, seed, asset_store_dir)
-    else:
-        pt_future = phrase_table_future(spark, seed)
+    store_dir = assets.store_dir_for(
+        asset_store_dir, checkpoint_dir, spark.sparkContext.master
+    )
+    store_future = assets.asset_store_future(seed, store_dir)
 
     # seed-KB fuse branch (xref clusters + reconcile/merge): everything
     # here derives from the seed KB only, yet as a serial tail it costs
@@ -166,25 +169,15 @@ def run_pipeline(
     if checkpoint_dir is None:
         stats = stats.persist()
 
-    if asset_store_dir:
-        from .assets import build_asset_store
-
-        assets_bc, phrase_table = build_asset_store(
-            spark, stats, asset_store_dir, seed, store_future=store_future
-        )
-    else:
-        assets_bc, phrase_table = build_assets(
-            spark, stats, seed, pt_future=pt_future
-        )
+    store, phrase_table = assets.build_asset_store(
+        spark, stats, store_dir, store_future=store_future
+    )
 
     # ONE annotation pass emits mention + relation rows together (the
     # annotator-chain shape; relations are order-dependent within a
-    # sentence, so they belong inside the per-document call). The
-    # equivalent join-based plan (mentions x broadcast(facts) x mentions
-    # + per-sentence solve) lives in relations.extract_relations and is
-    # kept result-identical by tests.
+    # sentence, so they belong inside the per-document call).
     annotations = _materialize(
-        annotate(documents, assets_bc), spark, checkpoint_dir, "annotations"
+        annotate(documents, store), spark, checkpoint_dir, "annotations"
     )
     if checkpoint_dir is None:
         annotations = annotations.persist()
@@ -222,4 +215,5 @@ def run_pipeline(
         "kb_sources": kb_sources,
         "kb_items": merged,
         "triples": triples,
+        "assets": store,
     }

@@ -606,10 +606,15 @@ def dedup_clusters(
 
     Scale shape: components use the same large-star/small-star
     alternation as identifier xref (kg/xref.py — O(log n) rounds on any
-    topology; a chain of 10^6 near-dup pairs converges), then one
-    component-keyed partial-agg count. Transitive closure is the
-    CORRECT semantics for near-dup keep-lists at corpus scale: A~B and
-    B~C must not both survive with B deleted."""
+    topology; a chain of 10^6 near-dup pairs converges), then
+    cluster_size from an unordered count window over the component key.
+    Transitive closure is the CORRECT semantics for near-dup keep-lists
+    at corpus scale: A~B and B~C must not both survive with B deleted.
+
+    Skew caveat: the window has no map-side partial aggregation and
+    sorts each partition by component, so one huge near-dup component
+    pushes all of its rows through a single task's sort (a groupBy
+    count would pre-aggregate before the shuffle)."""
     from pyspark.sql.window import Window
 
     from ..kg.xref import connected_components

@@ -198,8 +198,8 @@ def select_alias_rows(
 
 def build_phrase_table(anchor_threshold: int = 2) -> dict[int, list[tuple]]:
     """Lock-step with the pipeline's asset build: selection runs with
-    the SAME anchor threshold the pipeline passes (min_alias_count,
-    default 2 — select_alias_rows' own default of 100 is the
+    the SAME anchor threshold the pipeline uses (assets.MIN_ALIAS_COUNT
+    = 2 — select_alias_rows' own default of 100 is the
     bootstrap-round setting) and an entry's reliable flag is the OR of
     its selected rows' trusted bits, not hardcoded True — hardcoding
     was invisible only because every fixture alias is trusted."""

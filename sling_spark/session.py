@@ -18,6 +18,20 @@ from pyspark.sql import SparkSession
 # executor memory even at 100x content size.
 _ARROW_BATCH = "10000"
 
+# local mode: the driver heap IS the executor heap; 32 concurrent tasks
+# caching token-array columns thrash an 8g heap (measured 2x wall-clock
+# regression), so large hosts get up to this much
+_DRIVER_MEM_CAP = 48 << 30
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` default: half of physical memory, never
+    above 48g — a fixed 48g heap lets the JVM grow past a small host's
+    RAM and get OOM-killed."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys_bytes // 2, _DRIVER_MEM_CAP) >> 20}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -70,11 +84,12 @@ def get_spark(
         .config("spark.sql.codegen.maxFields", "256")
         # quiet the UI in tests / sandboxes
         .config("spark.ui.enabled", os.environ.get("SLING_SPARK_UI", "false"))
-        # local mode: driver heap IS the executor heap; 32 concurrent
-        # tasks caching token-array columns thrash an 8g heap (measured
-        # 2x wall-clock regression), so default high and let the OS lazily
-        # commit. Override via SLING_SPARK_DRIVER_MEM on small machines.
-        .config("spark.driver.memory", os.environ.get("SLING_SPARK_DRIVER_MEM", "48g"))
+        # sized to the host (default_driver_memory); SLING_SPARK_DRIVER_MEM
+        # overrides
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SLING_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -42,7 +42,7 @@ def read_corpus_stream(
 
 
 def annotate_stream(
-    corpus_stream: DataFrame, assets_bc, dedup_horizon: str = "24 hours"
+    corpus_stream: DataFrame, store, dedup_horizon: str = "24 hours"
 ) -> DataFrame:
     """Streaming corpus → streaming annotation rows. mapInPandas is a
     stateless narrow transform, so it composes with streaming unchanged —
@@ -60,7 +60,7 @@ def annotate_stream(
         .drop("_ingest_ts")
         .withColumn("content_sha", F.sha2(F.col("content"), 256))
     )
-    return annotate(docs, assets_bc)
+    return annotate(docs, store)
 
 
 def stream_triples(annotations: DataFrame) -> DataFrame:

@@ -4,10 +4,10 @@ from __future__ import annotations
 
 import pytest
 
-from sling_spark.kg.assets import build_assets, seed_dataframes
+from sling_spark.kg.assets import build_asset_store, load_assets, seed_dataframes
 from sling_spark.kg.documents import build_documents, idf_table
 from sling_spark.kg.mentions import annotate, mentions_of, relations_of
-from sling_spark.kg.relations import extract_relations, facts_df
+from sling_spark.kg.relations import facts_df
 from sling_spark.kg.xref import build_clusters
 from sling_spark.oracle import kg_oracle
 from sling_spark.sources.corpus import corpus_df
@@ -40,22 +40,21 @@ def oracle():
 
 
 @pytest.fixture(scope="module")
-def stages(spark):
+def stages(spark, tmp_path_factory):
     seed = seed_dataframes(spark)
     documents = build_documents(corpus_df(spark, N_FILES, partitions=4)).persist()
-    assets_bc, pt_df = build_assets(spark, documents, seed)
-    annotations = annotate(documents, assets_bc).persist()
-    mentions = mentions_of(annotations)
-    relations = relations_of(annotations)
-    relations_join = extract_relations(mentions, facts_df(seed["items"]))
+    store, pt_df = build_asset_store(
+        spark, documents, str(tmp_path_factory.mktemp("assets")), seed
+    )
+    annotations = annotate(documents, store).persist()
     return {
         "seed": seed,
         "documents": documents,
         "pt_df": pt_df,
-        "assets": assets_bc.value,
-        "mentions": mentions,
-        "relations": relations,
-        "relations_join": relations_join,
+        "store": store,
+        "assets": load_assets(store),
+        "mentions": mentions_of(annotations),
+        "relations": relations_of(annotations),
     }
 
 
@@ -104,18 +103,6 @@ def test_relations_match_oracle(stages, oracle):
     want = [tuple(t[c] for c in cols) for t in oracle["relations"]]
     assert sorted(got) == sorted(want)
     assert len(got) > 20
-
-
-def test_join_based_relations_equal_fused(stages):
-    """The declarative plan (mentions x broadcast(facts) x mentions +
-    per-sentence solve) and the fused annotator emit identical rows."""
-    cols = ["repo", "path", "commit", "sentence", "subj", "pred", "obj",
-            "begin", "end"]
-    fused = sorted(tuple(r[c] for c in cols) for r in stages["relations"].collect())
-    joined = sorted(
-        tuple(r[c] for c in cols) for r in stages["relations_join"].collect()
-    )
-    assert fused == joined
 
 
 def test_facts_closure_matches_lookup(spark, stages):
@@ -289,11 +276,11 @@ def test_inverse_property_reconciliation(spark):
 
 
 def test_asset_store_scale_path(spark, tmp_path):
-    """The 100x-scale asset path (SLING repository memory-map analog):
-    build_asset_store writes Parquet + broadcasts only a handle — NO
+    """The asset path (SLING repository memory-map analog):
+    build_asset_store writes Parquet and returns only a handle — NO
     driver collect anywhere — and workers lazily load per process.
-    Results are identical to broadcast mode; asset dicts derived from
-    the KB DataFrames match the fixture literals."""
+    Asset dicts derived from the KB DataFrames match the fixture
+    literals."""
     import pickle
 
     import pyspark.sql as psql
@@ -301,7 +288,6 @@ def test_asset_store_scale_path(spark, tmp_path):
     from sling_spark.kg.assets import (
         AssetStore,
         build_asset_store,
-        build_assets,
         gender_from_items,
         links_from_items,
         load_assets,
@@ -333,8 +319,7 @@ def test_asset_store_scale_path(spark, tmp_path):
         r["id"]: r["gender"] for r in gender_from_items(seed["items"]).collect()
     } == kb.gender_lookup()
 
-    # --- store mode: zero driver-side collect ---------------------------
-    bc1, _ = build_assets(spark, stats, seed)
+    # --- zero driver-side collect ---------------------------------------
     store_dir = str(tmp_path / "assets")
     orig_collect = psql.DataFrame.collect
 
@@ -343,18 +328,12 @@ def test_asset_store_scale_path(spark, tmp_path):
 
     psql.DataFrame.collect = no_collect
     try:
-        bc2, _pt = build_asset_store(spark, stats, store_dir, seed)
+        store, _pt = build_asset_store(spark, stats, store_dir, seed)
     finally:
         psql.DataFrame.collect = orig_collect
-    # the broadcast payload is a tiny handle, not the tables
-    assert isinstance(bc2.value, AssetStore)
-    assert len(pickle.dumps(bc2.value)) < 1000
-
-    # --- store-mode annotation == broadcast-mode annotation ------------
-    key = ["repo", "path", "begin", "end", "entity", "score"]
-    m1 = sorted(tuple(r[k] for k in key) for r in detect_mentions(docs, bc1).collect())
-    m2 = sorted(tuple(r[k] for k in key) for r in detect_mentions(docs, bc2).collect())
-    assert m1 == m2 and len(m1) > 0
+    # the UDF closures carry a tiny handle, not the tables
+    assert isinstance(store, AssetStore)
+    assert len(pickle.dumps(store)) < 1000
 
     # --- worker-side loader handles a table far beyond fixture scale ---
     from sling_spark.functions.tokenize import phrase_fingerprint, phrase_form
@@ -377,10 +356,10 @@ def test_asset_store_scale_path(spark, tmp_path):
     big_dir = str(tmp_path / "big_assets")
     psql.DataFrame.collect = no_collect
     try:
-        bc3, _ = build_asset_store(spark, stats, big_dir, big_seed)
+        big_store, _ = build_asset_store(spark, stats, big_dir, big_seed)
     finally:
         psql.DataFrame.collect = orig_collect
-    loaded = load_assets(bc3.value)
+    loaded = load_assets(big_store)
     # the alias selector folds the edit-distance-1 "v0" variant into
     # "v1" per entity, leaving one phrase per entity — 20k entries
     assert len(loaded.phrase_table) >= 20000
@@ -389,15 +368,14 @@ def test_asset_store_scale_path(spark, tmp_path):
         [("r", "p", "c", "sha", "uses bigalias7 v1 here")],
         "repo string, path string, commit string, content_sha string, content string",
     )
-    ents = {r["entity"] for r in detect_mentions(probe, bc3).collect()}
+    ents = {r["entity"] for r in detect_mentions(probe, big_store).collect()}
     assert "E7" in ents
 
     # --- rebuild at the SAME path invalidates worker caches -------------
-    # (ADVICE r02: _STORE_CACHE was keyed by path only, so a reused
-    # worker process silently annotated with the stale first build).
-    # Calling load_assets twice in THIS process is exactly the
-    # reused-worker scenario.
-    first = load_assets(bc3.value)
+    # (a cache keyed by path only would let a reused worker process
+    # silently annotate with the stale first build). Calling load_assets
+    # twice in THIS process is exactly the reused-worker scenario.
+    first = load_assets(big_store)
     extra = dict(big_seed)
     extra["aliases"] = big_seed["aliases"].union(
         spark.createDataFrame(
@@ -406,9 +384,9 @@ def test_asset_store_scale_path(spark, tmp_path):
             "entity string, alias string, fp long, count int, form int, sources int",
         )
     )
-    bc4, _ = build_asset_store(spark, stats, big_dir, extra)
-    assert bc4.value.token != bc3.value.token
-    second = load_assets(bc4.value)
+    rebuilt, _ = build_asset_store(spark, stats, big_dir, extra)
+    assert rebuilt.token != big_store.token
+    second = load_assets(rebuilt)
     fp_new = phrase_fingerprint("freshalias token")
     assert fp_new not in first.phrase_table  # stale build lacks it
     assert fp_new in second.phrase_table  # rebuild visible despite same path
@@ -417,51 +395,34 @@ def test_asset_store_scale_path(spark, tmp_path):
     # every superseded GB-scale asset copy)
     from sling_spark.kg.assets import _STORE_CACHE
 
-    assert _STORE_CACHE[bc4.value.path][0] == bc4.value.token
+    assert _STORE_CACHE[rebuilt.path][0] == rebuilt.token
 
     docs.unpersist()
     stats.unpersist()
 
 
-def test_asset_store_future_overlap_equivalence(spark, tmp_path):
-    """asset_store_future (corpus-independent writes launched at
-    pipeline start, overlapping the corpus stages on background
-    submitter threads) must leave the store byte-for-byte equivalent in
-    content to the serial build_asset_store path: same table names, same
-    rows, and workers load identical assets from either."""
-    from sling_spark.kg.assets import (
-        asset_store_future,
-        build_asset_store,
-        load_assets,
-        seed_dataframes,
-    )
-    from sling_spark.kg.documents import doc_stats, latest_with_sha
-    from sling_spark.sources.corpus import corpus_df
+def test_store_dir_rule():
+    """Where run_pipeline puts the asset store when no asset_store_dir
+    is given: under the checkpoint dir, else a fresh temp dir on a local
+    master; a cluster master with neither dir is an error (a driver-local
+    temp dir is invisible to the workers)."""
+    import os
 
-    seed = seed_dataframes(spark)
-    dir_fut = str(tmp_path / "fut")
-    fut = asset_store_future(spark, seed, dir_fut)
-    docs = latest_with_sha(corpus_df(spark, 30, partitions=4)).persist()
-    stats = doc_stats(docs).persist()
-    stats.count()
-    bc_fut, pt_fut = build_asset_store(
-        spark, stats, dir_fut, seed, store_future=fut
-    )
-    dir_ser = str(tmp_path / "ser")
-    bc_ser, pt_ser = build_asset_store(spark, stats, dir_ser, seed)
+    from sling_spark.kg.assets import store_dir_for
 
-    a_fut = load_assets(bc_fut.value)
-    a_ser = load_assets(bc_ser.value)
-    assert a_fut.phrase_table == a_ser.phrase_table
-    assert a_fut.idf == a_ser.idf
-    assert a_fut.popularity == a_ser.popularity
-    assert a_fut.links == a_ser.links
-    assert a_fut.statements == a_ser.statements
-    assert a_fut.gender == a_ser.gender
-    assert sorted(map(repr, pt_fut.collect())) == sorted(map(repr, pt_ser.collect()))
-    docs.unpersist()
-    stats.unpersist()
-
+    assert store_dir_for("/x/assets", "/ckpt", "yarn") == "/x/assets"
+    assert store_dir_for(None, "s3://b/ckpt/", "yarn") == "s3://b/ckpt/assets"
+    assert store_dir_for(None, "/ckpt", "local[4]") == "/ckpt/assets"
+    tmp = store_dir_for(None, None, "local[4]")
+    try:
+        assert os.path.isdir(tmp) and os.listdir(tmp) == []
+        other = store_dir_for(None, None, "local[*]")
+        assert other != tmp  # fresh per run
+        os.rmdir(other)
+    finally:
+        os.rmdir(tmp)
+    with pytest.raises(ValueError):
+        store_dir_for(None, None, "spark://host:7077")
 
 def test_alias_selector_thresholds(spark):
     """Full AliasSelector semantics (reference aliases.cc:246-624):
@@ -630,7 +591,6 @@ def test_phrase_structure_annotator(spark, stages):
     never a sub-mention, and sub-mentions resolving to the parent are
     dropped."""
     from sling_spark.functions.tokenize import tokenize
-    from sling_spark.kg.assets import build_assets, seed_dataframes
     from sling_spark.kg.phrase_structure import (
         analyze_phrase,
         phrase_structure,
@@ -651,9 +611,8 @@ def test_phrase_structure_annotator(spark, stages):
     wjs = [t.word for t in tokenize("Node.js")]
     assert ("Q13", "P1") in {(s, p) for _b, _e, s, p in analyze_phrase(wjs, "Q35", pt, st)}
 
-    # spark path over the pipeline's own mentions
-    assets_bc, _ = build_assets(spark, stages["documents"], stages["seed"])
-    sub_rows = phrase_structure(stages["mentions"], assets_bc).collect()
+    # spark path over the stages' own mentions and asset store
+    sub_rows = phrase_structure(stages["mentions"], stages["store"]).collect()
     rows = {(r["entity"], r["sub_entity"], r["pid"]) for r in sub_rows}
     assert ("Q1", "Q50", "P3") in rows
     # offsets: every sub-span sits strictly inside its parent span
@@ -779,7 +738,7 @@ def test_date_precision_merge_keeps_winner_qualifiers(spark):
 
 def test_phrase_table_oracle_matches_pipeline_on_anchor_aliases(spark):
     """The oracle phrase table selects with the pipeline's anchor
-    threshold (min_alias_count=2, not select_alias_rows' bootstrap
+    threshold (assets.MIN_ALIAS_COUNT=2, not select_alias_rows' bootstrap
     default of 100) and derives each entry's reliable flag from its
     sources — an anchor-class alias (sources=4, count in [2,100)) is
     selected by BOTH paths with reliable=False."""

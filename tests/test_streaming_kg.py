@@ -15,7 +15,7 @@ def _triple_set(df):
 
 
 def test_streaming_increments_match_batch(spark, tmp_path):
-    from sling_spark.kg.assets import build_assets, seed_dataframes
+    from sling_spark.kg.assets import build_asset_store, seed_dataframes
     from sling_spark.kg.documents import build_documents, latest_versions
     from sling_spark.kg.mentions import annotate, relations_of
     from sling_spark.kg.relations import doc_triples
@@ -42,11 +42,11 @@ def test_streaming_increments_match_batch(spark, tmp_path):
     # assets built from the FULL corpus documents (the commons KB is a
     # batch asset; streaming only annotates)
     docs_full = build_documents(full)
-    assets_bc, _ = build_assets(spark, docs_full, seed)
+    store, _ = build_asset_store(spark, docs_full, str(tmp_path / "assets"), seed)
 
     # increment 1
     stream = stream_triples(
-        annotate_stream(read_corpus_stream(spark, src), assets_bc)
+        annotate_stream(read_corpus_stream(spark, src), store)
     )
     run_to_parquet(stream, out, ckpt)
     n1 = spark.read.parquet(out).count()
@@ -54,19 +54,19 @@ def test_streaming_increments_match_batch(spark, tmp_path):
     # increment 2: drop more files into the source dir, re-run
     batch2.write.mode("append").parquet(src)
     stream = stream_triples(
-        annotate_stream(read_corpus_stream(spark, src), assets_bc)
+        annotate_stream(read_corpus_stream(spark, src), store)
     )
     run_to_parquet(stream, out, ckpt)
     streamed = spark.read.parquet(out)
     assert streamed.count() > n1 > 0
 
     # parity: streamed triples == batch annotation of the same corpus
-    batch_triples = doc_triples(relations_of(annotate(docs_full, assets_bc)))
+    batch_triples = doc_triples(relations_of(annotate(docs_full, store)))
     assert _triple_set(streamed) == _triple_set(batch_triples)
 
     # exactly-once: re-running with no new input appends nothing
     stream = stream_triples(
-        annotate_stream(read_corpus_stream(spark, src), assets_bc)
+        annotate_stream(read_corpus_stream(spark, src), store)
     )
     run_to_parquet(stream, out, ckpt)
     assert spark.read.parquet(out).count() == streamed.count()
@@ -103,12 +103,13 @@ def test_upsert_and_cdc(spark):
 
 def test_streaming_with_asset_store(spark, tmp_path):
     """Structured Streaming annotation with the Parquet-backed
-    AssetStore (no driver collect): the streamed triples equal the
-    broadcast-mode batch result — store mode composes with streaming."""
+    AssetStore (no driver collect): the streamed triples equal batch
+    annotation over the SAME store handle — the store composes with
+    streaming."""
     import pyspark.sql as psql
     from pyspark.sql import functions as F
 
-    from sling_spark.kg.assets import build_asset_store, build_assets, seed_dataframes
+    from sling_spark.kg.assets import build_asset_store, seed_dataframes
     from sling_spark.kg.documents import doc_stats, latest_with_sha
     from sling_spark.kg.mentions import annotate, relations_of
     from sling_spark.sources.corpus import corpus_df
@@ -131,14 +132,14 @@ def test_streaming_with_asset_store(spark, tmp_path):
 
     psql.DataFrame.collect = no_collect
     try:
-        store_bc, _ = build_asset_store(spark, stats, str(tmp_path / "assets"), seed)
+        store, _ = build_asset_store(spark, stats, str(tmp_path / "assets"), seed)
     finally:
         psql.DataFrame.collect = orig_collect
 
     src = str(tmp_path / "src")
     docs.drop("content_sha").write.parquet(src)
     run_to_parquet(
-        stream_triples(annotate_stream(read_corpus_stream(spark, src), store_bc)),
+        stream_triples(annotate_stream(read_corpus_stream(spark, src), store)),
         str(tmp_path / "out"), str(tmp_path / "ckpt"),
     )
     streamed = {
@@ -146,10 +147,9 @@ def test_streaming_with_asset_store(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
     }
 
-    batch_bc, _ = build_assets(spark, stats, seed)
     batch = {
         (r["subj"], r["pred"], r["obj"])
-        for r in relations_of(annotate(docs, batch_bc))
+        for r in relations_of(annotate(docs, store))
         .select(F.col("subj"), "pred", "obj").collect()
     }
     assert streamed == batch and len(streamed) > 0

@@ -35,7 +35,6 @@ def run_once(cores: int, n_files: int) -> dict:
         time.sleep(2)
 
     import shutil
-    import tempfile
 
     spark = get_spark(
         master=f"local[{cores}]",
@@ -43,17 +42,13 @@ def run_once(cores: int, n_files: int) -> dict:
         shuffle_partitions=2 * cores,
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # Parquet-store asset mode: the production/scale configuration
-    store_dir = tempfile.mkdtemp(prefix=f"scaling_assets_{cores}_")
     t0 = time.time()
-    res = run_pipeline(
-        spark, n_files=n_files, partitions=4 * cores, asset_store_dir=store_dir
-    )
+    res = run_pipeline(spark, n_files=n_files, partitions=4 * cores)
     n_triples = res["triples"].count()
     wall = time.time() - t0
     n_docs = res["documents"].count()
     spark.stop()
-    shutil.rmtree(store_dir, ignore_errors=True)
+    shutil.rmtree(res["assets"].path, ignore_errors=True)
     time.sleep(2)
     return {
         "cores": cores,

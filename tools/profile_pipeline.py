@@ -120,7 +120,7 @@ def main() -> None:
 
     t0 = time.time()
     seed = seed_dataframes(spark)
-    store_future = asset_store_future(spark, seed, store_dir)
+    store_future = asset_store_future(seed, store_dir)
     documents = synthetic_documents(spark, n_files, partitions=4 * cores)
     documents = documents.persist()
     n_docs = documents.count()
@@ -132,13 +132,13 @@ def main() -> None:
     mark("doc_stats", t0)
 
     t0 = time.time()
-    assets_bc, phrase_table = build_asset_store(
+    store, _ = build_asset_store(
         spark, stats, store_dir, seed, store_future=store_future
     )
     mark("asset_store_build", t0)
 
     t0 = time.time()
-    annotations = annotate(documents, assets_bc).persist()
+    annotations = annotate(documents, store).persist()
     annotations.count()
     mark("annotate", t0)
 

@@ -15,7 +15,9 @@ deterministic synthetic corpus is generated at ``--n-files`` scale
 (inside executors — nothing materializes on the driver).
 
 Outputs under --output: triples/ (bucketed by subject, partitioned by
-source), kb_items/, metrics/ (per-repo extraction counters). Resumable:
+source), kb_items/, metrics/ (per-repo extraction counters), and
+_assets/ (the annotator asset store, unless --asset-store puts it
+elsewhere). Resumable:
 re-running with the same --checkpoint resumes from the last completed
 stage.
 """
@@ -41,9 +43,9 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--asset-store", default=None,
-                    help="worker-visible dir: Parquet-backed annotator "
-                         "assets loaded lazily per worker (no driver "
-                         "collect) — for a KB that outgrows broadcast")
+                    help="worker-visible dir for the Parquet annotator "
+                         "assets each worker loads once per process "
+                         "(default: <output>/_assets)")
     args = ap.parse_args()
 
     from sling_spark.kg.materialize import (
@@ -68,7 +70,7 @@ def main() -> None:
         corpus=corpus,
         checkpoint_dir=args.checkpoint,
         partitions=args.partitions,
-        asset_store_dir=args.asset_store,
+        asset_store_dir=args.asset_store or f"{args.output}/_assets",
     )
     write_triples(res["triples"], f"{args.output}/triples")
     res["kb_items"].write.mode("overwrite").parquet(f"{args.output}/kb_items")
