@@ -42,6 +42,7 @@ def main() -> None:
     from sling_spark import contract
     from sling_spark.kg.pipeline import run_pipeline
     from sling_spark.session import get_spark
+    from sling_spark.sources.corpus import corpus_df
     from tools.window_sentinel import (QUIET_BURN_S, QUIET_DRAM_FLOOR_GBS,
                                        _mem_bw, _timed_burn)
 
@@ -69,10 +70,9 @@ def main() -> None:
         assert n >= 0
 
     # KG pipeline throughput: n_files scales with sf (bench tier =
-    # 200k files at sf0.1 per FIXTURES.md; sf0.01 → 20k, etc.).
-    # Assets run in Parquet-store mode — the production/scale
-    # configuration (no driver collect; measured faster than broadcast
-    # at every size, BENCH/BASELINE.md §5).
+    # 200k files at sf0.1 per FIXTURES.md; sf0.01 → 20k, etc.). The
+    # input is the synthetic corpus TABLE, so each sample includes the
+    # latest-version shuffle a real table input pays.
     #
     # NOISE ROBUSTNESS: the host is co-tenant and single samples of a
     # 40-180s job have recorded 2.7x phantom swings (round-2 verdict
@@ -91,7 +91,7 @@ def main() -> None:
     n_triples = 0
     for _ in range(n_samples):
         t0 = time.time()
-        res = run_pipeline(spark, n_files=n_files, partitions=4 * cpus)
+        res = run_pipeline(spark, corpus_df(spark, n_files, partitions=4 * cpus))
         n_triples = res["triples"].count()
         samples.append(round(time.time() - t0, 3))
         shutil.rmtree(res["assets"].path, ignore_errors=True)
@@ -110,10 +110,10 @@ def main() -> None:
         dedup_clusters, jaccard_pairs, lsh_candidate_pairs,
         minhash_signatures, shingles,
     )
-    from sling_spark.sources.corpus import synthetic_documents
+    from sling_spark.kg.documents import latest_with_sha
 
     t0 = time.time()
-    base = synthetic_documents(spark, n_files, partitions=4 * cpus).select(
+    base = latest_with_sha(corpus_df(spark, n_files, partitions=4 * cpus)).select(
         F.concat_ws("/", "repo", "path").alias("doc_id"),
         F.col("content").alias("text"),
     )

@@ -48,9 +48,10 @@ def _qc_frames(spark, n_files: int, cpus: int):
     """Identical dataflow to bench.py's corpus_qc_dedup block."""
     from pyspark.sql import functions as F
 
-    from sling_spark.sources.corpus import synthetic_documents
+    from sling_spark.kg.documents import latest_with_sha
+    from sling_spark.sources.corpus import corpus_df
 
-    base = synthetic_documents(spark, n_files, partitions=4 * cpus).select(
+    base = latest_with_sha(corpus_df(spark, n_files, partitions=4 * cpus)).select(
         F.concat_ws("/", "repo", "path").alias("doc_id"),
         F.col("content").alias("text"),
     )
@@ -204,6 +205,7 @@ def run_kg(n_files: int, n_samples: int = 3) -> None:
     import shutil
 
     from sling_spark.kg.pipeline import run_pipeline
+    from sling_spark.sources.corpus import corpus_df
 
     spark, cpus = _spark()
     samples = []
@@ -211,7 +213,7 @@ def run_kg(n_files: int, n_samples: int = 3) -> None:
     probe0 = {"burn_s": _timed_burn(), "dram_gbs": _mem_bw()}
     for _ in range(n_samples):
         t0 = time.time()
-        res = run_pipeline(spark, n_files=n_files, partitions=4 * cpus)
+        res = run_pipeline(spark, corpus_df(spark, n_files, partitions=4 * cpus))
         n_triples = res["triples"].count()
         samples.append(round(time.time() - t0, 3))
         shutil.rmtree(res["assets"].path, ignore_errors=True)

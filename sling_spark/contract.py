@@ -1426,6 +1426,18 @@ def _kg_oracle_40():
     return kg_oracle.run(40)
 
 
+@lru_cache(maxsize=1)
+def _kg_pipeline_40(spark):
+    """ONE run_pipeline over the deterministic 40-file corpus, shared by
+    every kg_* query that reads its outputs (triples, mentions, stats,
+    documents, the asset-store handle) — one pipeline run and one temp
+    asset dir per session instead of one per query."""
+    from .kg.pipeline import run_pipeline
+    from .sources.corpus import corpus_df
+
+    return run_pipeline(spark, corpus_df(spark, 40))
+
+
 def _sql_kg_triples() -> str:
     rows = sorted(
         {(t["subj"], t["pred"], t["obj"], t["source"]) for t in _kg_oracle_40()["triples"]}
@@ -1836,7 +1848,7 @@ def q_kg_biaffine_spans(spark, sf_dir):
     from .kg.documents import build_documents
     from .sources.corpus import corpus_df
 
-    docs = build_documents(corpus_df(spark, 20, partitions=4), layout="tokens")
+    docs = build_documents(corpus_df(spark, 20, partitions=4))
     return score_spans(docs, threshold=5.0)
 
 
@@ -1850,10 +1862,9 @@ def q_kg_transitions(spark, sf_dir):
     mentions/relations (themselves hash-verified by kg_mentions /
     kg_triples), so a divergence in either the annotations or the
     generator breaks the hash."""
-    from .kg.pipeline import run_pipeline
     from .kg.transitions import gold_transitions
 
-    res = run_pipeline(spark, n_files=40)
+    res = _kg_pipeline_40(spark)
     return gold_transitions(res["mentions"], res["relations"], res["doc_stats"])
 
 
@@ -1863,10 +1874,9 @@ def q_kg_action_table(spark, sf_dir):
     reference knolex-decoder.cc:118-151 MainDelegate/EvokeDelegate/
     ConnectDelegate + the trainer's ActionTable collection). Oracle:
     SQL GROUP BY over the independently generated action VALUES."""
-    from .kg.pipeline import run_pipeline
     from .kg.transitions import action_table, gold_transitions
 
-    res = run_pipeline(spark, n_files=40)
+    res = _kg_pipeline_40(spark)
     return action_table(
         gold_transitions(res["mentions"], res["relations"], res["doc_stats"])
     )
@@ -2047,7 +2057,7 @@ def q_doc_wordpiece_vocab(spark, sf_dir):
     from .kg.documents import build_documents
     from .sources.corpus import corpus_df
 
-    docs = build_documents(corpus_df(spark, 40, partitions=4), layout="tokens")
+    docs = build_documents(corpus_df(spark, 40, partitions=4))
     wf = sorted(
         (r["word"], r["freq"]) for r in word_frequencies(docs).collect()
     )
@@ -2093,7 +2103,7 @@ def q_kg_caspar_decode(spark, sf_dir):
     from .sources.corpus import corpus_df
 
     model = trained_model("caspar", 40)
-    docs = build_documents(corpus_df(spark, 20, partitions=4), layout="tokens")
+    docs = build_documents(corpus_df(spark, 20, partitions=4))
     return caspar_decode(docs, model)
 
 
@@ -2108,7 +2118,7 @@ def q_kg_knolex_decode(spark, sf_dir):
     from .sources.corpus import corpus_df
 
     model = trained_model("knolex", 40)
-    docs = build_documents(corpus_df(spark, 20, partitions=4), layout="tokens")
+    docs = build_documents(corpus_df(spark, 20, partitions=4))
     return caspar_decode(docs, model)
 
 
@@ -2162,9 +2172,8 @@ def q_kg_phrase_structure(spark, sf_dir):
     driver-side over the INDEPENDENT oracle's mentions + phrase table +
     fact closure."""
     from .kg.phrase_structure import phrase_structure
-    from .kg.pipeline import run_pipeline
 
-    res = run_pipeline(spark, n_files=40)
+    res = _kg_pipeline_40(spark)
     return phrase_structure(res["mentions"], res["assets"]).distinct()
 
 
@@ -2214,7 +2223,7 @@ def q_kg_bio_spans(spark, sf_dir):
     from .kg.documents import build_documents
     from .sources.corpus import corpus_df
 
-    docs = build_documents(corpus_df(spark, 20, partitions=4), layout="tokens")
+    docs = build_documents(corpus_df(spark, 20, partitions=4))
     return bio_spans(docs)
 
 
@@ -2304,10 +2313,9 @@ def q_kg_triples(spark, sf_dir):
     triples from the full KG pipeline on the deterministic 40-file corpus,
     value-hash checked against the independent pure-Python oracle
     (sling_spark.oracle.kg_oracle) rendered as a DuckDB VALUES table."""
-    from .kg.pipeline import run_pipeline
 
     return (
-        run_pipeline(spark, n_files=40)["triples"]
+        _kg_pipeline_40(spark)["triples"]
         .select("subj", "pred", "obj", "source")
         .distinct()
     )
@@ -2318,9 +2326,8 @@ def q_kg_mentions(spark, sf_dir):
     Scores are bit-exact between the Spark pipeline and the Python oracle
     (shared scalar modules), so floor(score*1e6) is deterministic on both
     sides — no float-formatting risk in the value hash."""
-    from .kg.pipeline import run_pipeline
 
-    m = run_pipeline(spark, n_files=40)["mentions"]
+    m = _kg_pipeline_40(spark)["mentions"]
     return m.select(
         "repo",
         "path",
@@ -2400,9 +2407,8 @@ def q_kg_lex(spark, sf_dir):
     '[phrase|Qid]' markup — verified against the Python twin rendering
     the oracle's mentions over the shared tokenizer."""
     from .functions.lex import render_lex
-    from .kg.pipeline import run_pipeline
 
-    res = run_pipeline(spark, n_files=40)
+    res = _kg_pipeline_40(spark)
     return render_lex(res["documents"], res["mentions"]).select("repo", "path", "lex")
 
 
@@ -2494,7 +2500,7 @@ def q_kg_stream_triples(spark, sf_dir):
     import tempfile
 
     from .kg.assets import build_asset_store, seed_dataframes
-    from .kg.documents import build_documents, latest_versions
+    from .kg.documents import doc_stats, latest_versions, latest_with_sha
     from .kg.reconcile import (
         invert_statements,
         kb_triples,
@@ -2519,7 +2525,7 @@ def q_kg_stream_triples(spark, sf_dir):
     try:
         seed = seed_dataframes(spark)
         store, _ = build_asset_store(
-            spark, build_documents(full), f"{tmp}/assets", seed
+            spark, doc_stats(latest_with_sha(full)), f"{tmp}/assets", seed
         )
 
         # increment 1: half the files; increment 2: the rest

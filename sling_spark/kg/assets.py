@@ -296,6 +296,8 @@ def build_asset_store(
     driver-side collect anywhere, so the phrase table / fact table can
     exceed driver memory entirely. Returns (:class:`AssetStore`,
     phrase_table_df); the handle pickles into the annotator closures.
+    ``documents`` needs only the ``fp_unique`` column (the IDF input):
+    the pipeline passes ``doc_stats``.
 
     ``store_future`` (from :func:`asset_store_future`) means the five
     corpus-independent writes were launched earlier and have been
@@ -317,10 +319,5 @@ def build_asset_store(
         f.result()  # join + propagate any background write error
     # unique build token: rebuilding at the same path must invalidate
     # worker-side _STORE_CACHE entries from earlier builds
-    token = uuid.uuid4().hex
-    try:  # best-effort provenance marker alongside the Parquet
-        with open(os.path.join(store_dir, "_build_token"), "w") as fh:
-            fh.write(token)
-    except OSError:
-        pass  # non-local FS: the token in the handle is authoritative
-    return AssetStore(path=store_dir, token=token), store_future["dfs"]["phrase_table"]
+    store = AssetStore(path=store_dir, token=uuid.uuid4().hex)
+    return store, store_future["dfs"]["phrase_table"]

@@ -130,7 +130,7 @@ def sentence_bounds(brks: list[int]) -> list[tuple[int, int]]:
 
 def score_spans(documents: DataFrame, scorer: BiaffineScorer | None = None,
                 threshold: float = 2.0) -> DataFrame:
-    """documents (tokens layout, see build_documents) → (doc, sentence,
+    """documents (``build_documents`` token arrays) → (doc, sentence,
     begin, end, label, score) span rows. One mapInPandas pass; the
     lexical encoder runs ONCE per document (boundary-aware, so
     per-sentence slices equal per-sentence encodings), the biaffine

@@ -147,7 +147,7 @@ class BioTagger:
 
 
 def bio_spans(documents: DataFrame, tagger: BioTagger | None = None) -> DataFrame:
-    """documents (tokens layout, see build_documents) → (doc, sentence,
+    """documents (``build_documents`` token arrays) → (doc, sentence,
     begin, end, type, score) BIO span rows. One mapInPandas pass; the
     lexical encoder and the logits matmul run ONCE per Arrow batch over
     every document's concatenated tokens (verdict r3 item 5 — no

@@ -7,24 +7,26 @@ fingerprint and case form (sling/nlp/document/document.h:62-123). For our
 source-code corpus, the tokenizer is ``functions.tokenize`` (line =
 sentence unit).
 
-Data layout (scale-critical): tokens are stored as PARALLEL PRIMITIVE
-ARRAYS (t_word, t_fp, t_brk, t_form, t_begin, t_end) rather than an
-array<struct<...>> — Arrow converts primitive lists an order of magnitude
-faster than list-of-dict struct arrays, and every downstream consumer
-(mentions UDF, IDF, vocabulary) reads only the arrays it needs (column
-pruning inside the row). ``fp_unique`` (the per-doc distinct token
-fingerprints) is precomputed HERE so the IDF build explodes ~100 longs
-per doc instead of ~300 structs.
+Two layouts, one per kind of consumer:
+
+- The PIPELINE path is ``latest_with_sha`` → ``doc_stats``: the raw
+  latest-version rows (content + sha256, pure Catalyst) and, from ONE
+  tokenize pass, the per-doc ``n_tokens`` and ``fp_unique`` (distinct
+  token fingerprints > 1) that feed ``idf_table`` and the extraction
+  metrics. The annotator re-tokenizes content in-process (measured on
+  this corpus: token arrays cost ~2ms/doc in Arrow<->pandas conversion
+  vs 0.8ms to simply re-tokenize — the fat intermediate loses).
+- ``build_documents`` materializes the tokens as PARALLEL PRIMITIVE
+  ARRAYS (t_word, t_fp, t_brk, t_form, t_begin, t_end) rather than an
+  array<struct<...>> — Arrow converts primitive lists an order of
+  magnitude faster than list-of-dict struct arrays — for consumers that
+  need tokens as data (vocabulary, biaffine, bio, wordpiece).
 
 Scale notes
 -----------
 - Latest-commit selection is ONE shuffle by (repo, path) — a group-wide
   argmax expressed as max_by so Catalyst plans a partial aggregation
-  (map-side combine), not a window sort. For the SYNTHETIC corpus the
-  pipeline skips even that: the winner per file is deterministic, so
-  corpus.synthetic_documents generates latest-only rows with zero
-  content shuffle (the 100 TB analog of deduplicating on keys and
-  re-reading payloads from the table; parity pytest-enforced).
+  (map-side combine), not a window sort.
 - Tokenization is an Arrow-batched mapInPandas; content is dropped after
   tokenizing (rows stay narrow; the sha256 lineage column preserves the
   per-row invariant from BASELINE.json).
@@ -37,12 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tokenize import tokenize
-
-DOCUMENTS_CONTENT_SCHEMA = (
-    "repo string, path string, commit string, lang string, "
-    "content_sha string, n_tokens int, fp_unique array<long>, "
-    "content string"
-)
 
 DOCUMENTS_TOKENS_SCHEMA = (
     "repo string, path string, commit string, lang string, "
@@ -122,25 +118,12 @@ def doc_stats(documents_raw: DataFrame) -> DataFrame:
     )
 
 
-def build_documents(corpus: DataFrame, layout: str = "content") -> DataFrame:
-    """Tokenize the latest version of every file.
-
-    ``layout`` picks what crosses Arrow (measured on this corpus: token
-    arrays cost ~2ms/doc in Arrow<->pandas conversion vs 0.8ms to simply
-    RE-tokenize from content — the fat intermediate loses):
-
-    - "content": repo/path/commit/lang/content_sha/n_tokens/fp_unique +
-      the raw ``content`` string — the pipeline layout; the annotator
-      re-tokenizes in-process.
-    - "tokens": adds the six parallel token arrays and drops content —
-      for consumers that need materialized tokens (vocabulary, biaffine,
-      diagnostics).
-    """
-    latest = latest_with_sha(corpus)
-    with_tokens = layout == "tokens"
-    base_cols = ["repo", "path", "commit", "lang", "content_sha",
-                 "n_tokens", "fp_unique"]
-    cols = base_cols + (TOKEN_COLS if with_tokens else ["content"])
+def build_documents(corpus: DataFrame) -> DataFrame:
+    """Tokenize the latest version of every file into the token-array
+    layout: repo/path/commit/lang/content_sha/n_tokens/fp_unique plus the
+    six parallel token arrays (content dropped)."""
+    cols = ["repo", "path", "commit", "lang", "content_sha",
+            "n_tokens", "fp_unique"] + TOKEN_COLS
 
     def tok(batches):
         for pdf in batches:
@@ -156,29 +139,25 @@ def build_documents(corpus: DataFrame, layout: str = "content") -> DataFrame:
                 data["content_sha"].append(row.content_sha)
                 data["n_tokens"].append(len(toks))
                 data["fp_unique"].append(sorted({t.fp for t in toks if t.fp > 1}))
-                if with_tokens:
-                    if toks:
-                        tb, te, tw, tk, tf, tm = zip(
-                            *((t.begin, t.end, t.word, t.brk, t.fp, t.form)
-                              for t in toks)
-                        )
-                    else:
-                        tb = te = tw = tk = tf = tm = ()
-                    data["t_begin"].append(list(tb))
-                    data["t_end"].append(list(te))
-                    data["t_word"].append(list(tw))
-                    data["t_brk"].append(list(tk))
-                    data["t_fp"].append(list(tf))
-                    data["t_form"].append(list(tm))
+                if toks:
+                    tb, te, tw, tk, tf, tm = zip(
+                        *((t.begin, t.end, t.word, t.brk, t.fp, t.form)
+                          for t in toks)
+                    )
                 else:
-                    data["content"].append(row.content)
+                    tb = te = tw = tk = tf = tm = ()
+                data["t_begin"].append(list(tb))
+                data["t_end"].append(list(te))
+                data["t_word"].append(list(tw))
+                data["t_brk"].append(list(tk))
+                data["t_fp"].append(list(tf))
+                data["t_form"].append(list(tm))
             yield pd.DataFrame(data, columns=cols)
 
-    schema = DOCUMENTS_TOKENS_SCHEMA if with_tokens else DOCUMENTS_CONTENT_SCHEMA
-    return latest.mapInPandas(tok, schema=schema)
+    return latest_with_sha(corpus).mapInPandas(tok, schema=DOCUMENTS_TOKENS_SCHEMA)
 
 
-def idf_table(documents: DataFrame, n_docs: int | None = None) -> DataFrame:
+def idf_table(documents: DataFrame) -> DataFrame:
     """Document-frequency → IDF per token fingerprint.
 
     Reference semantics: vocabulary-mapper + idf-table-builder
@@ -188,8 +167,7 @@ def idf_table(documents: DataFrame, n_docs: int | None = None) -> DataFrame:
 
     Plan: explode the PRE-DEDUPED fp_unique column → one hash agg with
     map-side combine. No per-doc distinct shuffle."""
-    if n_docs is None:
-        n_docs = documents.count()
+    n_docs = documents.count()
     df_counts = (
         documents.select(F.explode("fp_unique").alias("fp"))
         .groupBy("fp")

@@ -97,7 +97,7 @@ class KbAssets:
     popularity: dict[str, int]  # entity -> popularity count
     links: dict[str, list[tuple[str, int]]]  # src -> [(dst, count)]
     statements: dict[str, list[tuple[str, str]]]  # subj -> [(pid, obj)]
-    gender: dict[str, int] | None = None  # entity -> G_* (anaphora agreement)
+    gender: dict[str, int]  # entity -> G_* (anaphora agreement)
 
 
 def _sentence_bounds(brks) -> list[tuple[int, int]]:
@@ -659,7 +659,7 @@ def _annotate_from_candidates(
     cands: tuple,
     assets: KbAssets,
     npa: _NpAssets,
-    pron: np.ndarray | None = None,
+    pron: np.ndarray,
 ) -> tuple[list[dict], list[dict]]:
     """Stages 3-5 for ONE document given its pre-enumerated candidate
     spans (document-relative): DP cover per sentence, then the
@@ -669,8 +669,7 @@ def _annotate_from_candidates(
 
     ``pron`` (the tokenizer's per-word pronoun gender codes, -1 for
     non-pronouns) restricts the anaphora stage to flagged positions —
-    pronoun-free sentences skip stage 4b entirely; omitted, the stage
-    probes every token."""
+    pronoun-free sentences skip stage 4b entirely."""
     phrase_table = assets.phrase_table
     popularity = assets.popularity
     links = assets.links
@@ -687,8 +686,8 @@ def _annotate_from_candidates(
 
     bounds = _sentence_bounds(brks)
     # pronoun positions, document-level, consumed by a running pointer
-    # (sentences iterate in begin order); None = probe every token
-    pron_nz = np.nonzero(pron >= 0)[0].tolist() if pron is not None else None
+    # (sentences iterate in begin order)
+    pron_nz = np.nonzero(pron >= 0)[0].tolist()
     pron_ptr = 0
     if cb.size:
         # one vectorized pass assigns candidates to sentences (cands are
@@ -793,17 +792,14 @@ def _annotate_from_candidates(
         # UNKNOWN — exactly the agreement class 'it'/'this' matches.
         # Anaphors then act as relation SUBJECTS only (never as targets).
         anaphors: list[tuple[int, int, str]] = []
-        if pron_nz is not None:
-            # flagged pronoun positions inside this sentence only
-            positions = []
-            while pron_ptr < len(pron_nz) and pron_nz[pron_ptr] < se:
-                if pron_nz[pron_ptr] >= sb:
-                    positions.append(pron_nz[pron_ptr])
-                pron_ptr += 1
-        else:
-            positions = range(sb, se)
+        # flagged pronoun positions inside this sentence only
+        positions = []
+        while pron_ptr < len(pron_nz) and pron_nz[pron_ptr] < se:
+            if pron_nz[pron_ptr] >= sb:
+                positions.append(pron_nz[pron_ptr])
+            pron_ptr += 1
         if positions:
-            gender_of = assets.gender or {}
+            gender_of = assets.gender
             covered = {i for b, e, _ent in sent_mentions for i in range(b, e)}
         for i in positions:
             pgender = _pron_code(words[i])

@@ -16,11 +16,13 @@ Stage DAG (SURVEY.md §7):
     corpus-independent, and as a serial tail its dimension-sized shuffle
     stages cost a fixed ~6s at ANY corpus size / core count)
 
-(Synthetic, checkpoint-less runs replace the corpus→documents pair with
-the zero-shuffle `synthetic_documents` generator.) Annotator assets
-reach the workers one way only: written once as a Parquet AssetStore
-(kg/assets.py) whose handle the annotate UDF closes over; each worker
-loads it once per process.
+The corpus is always a ``(repo, path, commit, lang, content)`` table
+(a Parquet/Iceberg read, ``corpus_from_table``, or the synthetic
+``corpus_df``); documents are built from it one way only —
+``latest_with_sha`` (one shuffle by (repo, path)) then ``doc_stats``.
+Annotator assets reach the workers one way only: written once as a
+Parquet AssetStore (kg/assets.py) whose handle the annotate UDF closes
+over; each worker loads it once per process.
 
 Checkpointing (north rule "resumable from per-partition checkpoint"):
 every materialized stage is written to ``<dir>/<stage>`` as Parquet; a
@@ -38,7 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.corpus import corpus_df
 from . import assets
 from .assets import seed_dataframes
 from .documents import doc_stats, latest_with_sha
@@ -75,14 +76,13 @@ def _materialize(df, spark: SparkSession, path: str | None, name: str):
 
 def run_pipeline(
     spark: SparkSession,
-    n_files: int = 200,
-    corpus: DataFrame | None = None,
+    corpus: DataFrame,
     checkpoint_dir: str | None = None,
-    partitions: int | None = None,
     seed: dict[str, DataFrame] | None = None,
     asset_store_dir: str | None = None,
 ) -> dict:
-    """Run the full pipeline; returns every stage output by name, plus
+    """Run the full pipeline over the ``corpus`` table (columns repo,
+    path, commit, lang, content); returns every stage output by name, plus
     the annotator ``assets`` handle (an ``assets.AssetStore``) for
     downstream annotators such as phrase_structure.
 
@@ -135,29 +135,13 @@ def run_pipeline(
     kb_pool = ThreadPoolExecutor(max_workers=1, thread_name_prefix="kb-branch")
     kb_future = kb_pool.submit(_kb_branch)
     kb_pool.shutdown(wait=False)
-    if corpus is None and checkpoint_dir is None:
-        # synthetic corpus, no raw-corpus checkpoint requested: generate
-        # the latest-version documents DIRECTLY (zero-shuffle; the
-        # winner per file is deterministic — corpus.latest_rows). The
-        # content never enters a shuffle, matching how a real run would
-        # dedup on keys and re-read payloads from the table.
-        from ..sources.corpus import synthetic_documents
+    corpus = _materialize(corpus, spark, checkpoint_dir, "corpus")
 
-        # the raw corpus stays available LAZILY (provenance/sha audits
-        # recompute it on demand); the pipeline itself never runs it
-        corpus = corpus_df(spark, n_files, partitions=partitions)
-        documents = synthetic_documents(spark, n_files, partitions=partitions)
-    else:
-        if corpus is None:
-            corpus = corpus_df(spark, n_files, partitions=partitions)
-        corpus = _materialize(corpus, spark, checkpoint_dir, "corpus")
-
-        # Raw layout (pure Catalyst: latest-version + sha) — content
-        # never crosses Arrow OUT of Python; the tokenizing consumers
-        # below read it.
-        documents = _materialize(
-            latest_with_sha(corpus), spark, checkpoint_dir, "documents"
-        )
+    # Raw layout (pure Catalyst: latest-version + sha) — content never
+    # crosses Arrow OUT of Python; the tokenizing consumers below read it.
+    documents = _materialize(
+        latest_with_sha(corpus), spark, checkpoint_dir, "documents"
+    )
     if checkpoint_dir is None:
         # documents feeds the stats pass AND mention detection; without a
         # parquet checkpoint, cache to avoid recomputing latest-versions.

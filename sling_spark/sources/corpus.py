@@ -334,56 +334,6 @@ def corpus_rows(n_files: int, lo: int = 0, hi: int | None = None):
             }
 
 
-def latest_rows(n_files: int, lo: int = 0, hi: int | None = None):
-    """Yield the LATEST-version document row per file index — winner =
-    lexicographically greatest commit hash, exactly latest_versions'
-    last-writer-wins rule — plus the content sha256. Because generation
-    is deterministic, the winner is computable per file with NO shuffle:
-    the 100 TB analog of deduplicating on keys and re-reading payloads
-    from storage instead of shuffling them (parity with
-    latest_with_sha(corpus_df(...)) is pytest-enforced)."""
-    import hashlib as _hashlib
-
-    hi = n_files if hi is None else hi
-    for i in range(lo, min(hi, n_files)):
-        repo, path, lang, versions = file_spec(i, n_files)
-        v = max(versions, key=lambda ver: commit_hex(repo, path, ver))
-        content = generate_content(repo, path, lang, v)
-        yield {
-            "repo": repo,
-            "path": path,
-            "commit": commit_hex(repo, path, v),
-            "lang": lang,
-            "content_sha": _hashlib.sha256(content.encode("utf-8")).hexdigest(),
-            "content": content,
-        }
-
-
-def synthetic_documents(spark, n_files: int, partitions: int | None = None):
-    """Distributed latest-version documents table (raw layout of
-    documents.latest_with_sha) generated WITHOUT the content shuffle —
-    see latest_rows. Used by the pipeline when the corpus is synthetic
-    and no raw-corpus checkpoint is requested."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    partitions = partitions or max(8, spark.sparkContext.defaultParallelism)
-    idx = spark.range(0, n_files, 1, partitions).select(F.col("id").cast("long"))
-    cols = ["repo", "path", "commit", "lang", "content_sha", "content"]
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].tolist()
-            rows = []
-            for i in ids:
-                rows.extend(latest_rows(n_files, int(i), int(i) + 1))
-            yield pd.DataFrame(rows, columns=cols)
-
-    schema = ("repo string, path string, commit string, lang string, "
-              "content_sha string, content string")
-    return idx.mapInPandas(gen, schema=schema)
-
-
 def corpus_df(spark, n_files: int, partitions: int | None = None):
     """Distributed corpus DataFrame: an index range partitioned by Spark,
     content generated inside each partition (no driver materialization —

@@ -179,8 +179,9 @@ def test_lex_render_and_parse_roundtrip():
 def test_render_lex_over_pipeline(spark):
     from sling_spark.functions.lex import parse_lex, render_lex
     from sling_spark.kg.pipeline import run_pipeline
+    from sling_spark.sources.corpus import corpus_df
 
-    res = run_pipeline(spark, n_files=20)
+    res = run_pipeline(spark, corpus_df(spark, 20))
     lex_df = render_lex(res["documents"], res["mentions"])
     rows = lex_df.collect()
     assert len(rows) == res["documents"].count()

@@ -237,7 +237,7 @@ def test_biaffine_batched_scoring(spark):
     b = scorer.score_sentence(fps)
     assert a == b and len(a) > 0  # deterministic
     # spark path produces rows with sane spans (needs the tokens layout)
-    docs = build_documents(corpus_df(spark, 6, partitions=2), layout="tokens")
+    docs = build_documents(corpus_df(spark, 6, partitions=2))
     spans = score_spans(docs, scorer, threshold=3.0)
     rows = spans.collect()
     assert all(r["end"] > r["begin"] for r in rows)
@@ -278,7 +278,7 @@ def test_bio_decoder_constrained_decode(spark):
     )
     # spark path (batch-level encode+matmul) == per-document driver
     # decode on the same documents
-    docs = build_documents(corpus_df(spark, 6, partitions=2), layout="tokens")
+    docs = build_documents(corpus_df(spark, 6, partitions=2))
     got = {
         (r["repo"], r["path"], r["sentence"], r["begin"], r["end"], r["type"],
          r["score"])

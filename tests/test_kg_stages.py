@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 from sling_spark.kg.assets import build_asset_store, load_assets, seed_dataframes
-from sling_spark.kg.documents import build_documents, idf_table
+from sling_spark.kg.documents import doc_stats, idf_table, latest_with_sha
 from sling_spark.kg.mentions import annotate, mentions_of, relations_of
 from sling_spark.kg.relations import facts_df
 from sling_spark.kg.xref import build_clusters
@@ -41,15 +41,19 @@ def oracle():
 
 @pytest.fixture(scope="module")
 def stages(spark, tmp_path_factory):
+    """The pipeline's documents path (latest_with_sha → doc_stats), its
+    asset store and its single annotation pass, stage by stage."""
     seed = seed_dataframes(spark)
-    documents = build_documents(corpus_df(spark, N_FILES, partitions=4)).persist()
+    documents = latest_with_sha(corpus_df(spark, N_FILES, partitions=4)).persist()
+    stats = doc_stats(documents).persist()
     store, pt_df = build_asset_store(
-        spark, documents, str(tmp_path_factory.mktemp("assets")), seed
+        spark, stats, str(tmp_path_factory.mktemp("assets")), seed
     )
     annotations = annotate(documents, store).persist()
     return {
         "seed": seed,
         "documents": documents,
+        "stats": stats,
         "pt_df": pt_df,
         "store": store,
         "assets": load_assets(store),
@@ -59,16 +63,25 @@ def stages(spark, tmp_path_factory):
 
 
 def test_documents_match_oracle(stages, oracle):
-    got = {
-        (r["repo"], r["path"], r["commit"], r["content_sha"], r["n_tokens"])
+    docs = {
+        (r["repo"], r["path"], r["commit"], r["content_sha"])
         for r in stages["documents"].collect()
     }
-    want = {
-        (d["repo"], d["path"], d["commit"], d["content_sha"], len(d["tokens"]))
+    assert docs == {
+        (d["repo"], d["path"], d["commit"], d["content_sha"])
         for d in oracle["docs"]
     }
-    assert got == want
-    assert len(got) == N_FILES  # latest-commit dedup kept one row per file
+    assert len(docs) == N_FILES  # latest-commit dedup kept one row per file
+    # doc_stats' findall + word_attrs fast path vs the full tokenizer
+    stats = {
+        (r["repo"], r["path"], r["commit"], r["n_tokens"], tuple(r["fp_unique"]))
+        for r in stages["stats"].collect()
+    }
+    assert stats == {
+        (d["repo"], d["path"], d["commit"], len(d["tokens"]),
+         tuple(sorted({t.fp for t in d["tokens"] if t.fp > 1})))
+        for d in oracle["docs"]
+    }
 
 
 def test_phrase_table_matches_oracle(stages, oracle):
@@ -80,7 +93,7 @@ def test_phrase_table_matches_oracle(stages, oracle):
 
 
 def test_idf_matches_oracle(spark, stages, oracle):
-    got = {r["fp"]: r["idf"] for r in idf_table(stages["documents"]).collect()}
+    got = {r["fp"]: r["idf"] for r in idf_table(stages["stats"]).collect()}
     want = oracle["idf"]
     assert set(got) == set(want)
     for fp, v in want.items():

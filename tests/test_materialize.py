@@ -11,10 +11,11 @@ from sling_spark.kg.materialize import (
     write_triples,
 )
 from sling_spark.kg.pipeline import run_pipeline
+from sling_spark.sources.corpus import corpus_df
 
 
 def test_materialize_and_metrics(spark, tmp_path):
-    res = run_pipeline(spark, n_files=40)
+    res = run_pipeline(spark, corpus_df(spark, 40))
     out = str(tmp_path / "triples")
     write_triples(res["triples"], out, n_buckets=8)
     back = spark.read.parquet(out)
@@ -43,7 +44,7 @@ def test_anchor_alias_bootstrap(spark):
     from sling_spark.kg.assets import seed_dataframes
     from sling_spark.kg.phrase_table import build_phrase_table, select_aliases
 
-    res = run_pipeline(spark, n_files=40)
+    res = run_pipeline(spark, corpus_df(spark, 40))
     anchors = corpus_anchor_aliases(res["mentions"], min_count=2)
     rows = anchors.collect()
     assert len(rows) > 10

@@ -527,8 +527,8 @@ def test_text_and_text_map_readers(spark, tmp_path):
 
 def test_external_corpus_table_end_to_end(spark, tmp_path):
     """The external-table ingest path (corpus_from_table -> run_pipeline)
-    produces EXACTLY the triples of the synthetic path on the same data —
-    the spark-submit deployment shape, schema-validated."""
+    produces EXACTLY the triples of the in-memory synthetic corpus on the
+    same data — the spark-submit deployment shape, schema-validated."""
     import pytest as _pytest
 
     from pyspark.sql import functions as F
@@ -541,7 +541,7 @@ def test_external_corpus_table_end_to_end(spark, tmp_path):
     corpus_df(spark, 40, partitions=4).write.parquet(path)
     external = corpus_from_table(spark.read.parquet(path)).drop("content_sha")
     res_ext = run_pipeline(spark, corpus=external)
-    res_syn = run_pipeline(spark, n_files=40)
+    res_syn = run_pipeline(spark, corpus_df(spark, 40, partitions=4))
     cols = ["subj", "pred", "obj", "source"]
     a = {tuple(r[c] for c in cols) for r in res_ext["triples"].collect()}
     b = {tuple(r[c] for c in cols) for r in res_syn["triples"].collect()}

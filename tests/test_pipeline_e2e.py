@@ -18,6 +18,7 @@ from sling_spark.kg.evaluation import (
 )
 from sling_spark.kg.pipeline import run_pipeline
 from sling_spark.oracle import kg_oracle
+from sling_spark.sources.corpus import corpus_df
 
 N_FILES = 120
 
@@ -30,7 +31,7 @@ def oracle():
 @pytest.fixture(scope="module")
 def results(spark, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
-    return run_pipeline(spark, n_files=N_FILES, checkpoint_dir=ckpt), ckpt
+    return run_pipeline(spark, corpus_df(spark, N_FILES), checkpoint_dir=ckpt), ckpt
 
 
 def _dictrows(df):
@@ -146,7 +147,7 @@ def test_resumability(spark, results, oracle):
     # simulate a crash after annotation: downstream stages lost
     for stage in ("triples", "kb_items", "clusters"):
         shutil.rmtree(f"{ckpt}/{stage}", ignore_errors=True)
-    res2 = run_pipeline(spark, n_files=N_FILES, checkpoint_dir=ckpt)
+    res2 = run_pipeline(spark, corpus_df(spark, N_FILES), checkpoint_dir=ckpt)
     after = triple_set(_dictrows(res2["triples"]))
     assert before == after
 
@@ -172,22 +173,6 @@ def test_materialize_resumes_on_uri_checkpoint(spark, tmp_path):
 def test_prf_scoring():
     s = PRF.score({1, 2, 3, 4}, {2, 3, 4, 5})
     assert s.precision == 0.75 and s.recall == 0.75
-
-
-def test_synthetic_documents_equal_shuffled_path(spark):
-    """The zero-shuffle synthetic documents table is row-identical to
-    latest_with_sha(corpus_df(...)) — same last-writer-wins winners,
-    same sha256 (Python hashlib == Spark sha2)."""
-    from sling_spark.kg.documents import latest_with_sha
-    from sling_spark.sources.corpus import corpus_df, synthetic_documents
-
-    cols = ["repo", "path", "commit", "lang", "content_sha", "content"]
-    a = {tuple(r[c] for c in cols)
-         for r in synthetic_documents(spark, 120, partitions=4).collect()}
-    b = {tuple(r[c] for c in cols)
-         for r in latest_with_sha(corpus_df(spark, 120, partitions=4))
-         .select(*cols).collect()}
-    assert a == b and len(a) == 120
 
 
 def test_pipeline_with_wikidata_imported_kb(spark, tmp_path):

@@ -53,14 +53,16 @@ def test_mentions_stage_is_narrow(spark, tmp_path):
     between the documents scan and the mentions output must be
     exchange-free (worker-loaded asset store, mapInPandas)."""
     from sling_spark.kg.assets import build_asset_store, seed_dataframes
-    from sling_spark.kg.documents import build_documents
+    from sling_spark.kg.documents import doc_stats, latest_with_sha
     from sling_spark.kg.mentions import detect_mentions
     from sling_spark.sources.corpus import corpus_df
 
     seed = seed_dataframes(spark)
-    docs = build_documents(corpus_df(spark, 30, partitions=2)).persist()
+    docs = latest_with_sha(corpus_df(spark, 30, partitions=2)).persist()
     docs.count()
-    store, _ = build_asset_store(spark, docs, str(tmp_path / "assets"), seed)
+    store, _ = build_asset_store(
+        spark, doc_stats(docs), str(tmp_path / "assets"), seed
+    )
     mentions = detect_mentions(docs, store)
     plan = formatted_plan(mentions)
     # the persisted documents relation contains its own (expected)
@@ -113,15 +115,13 @@ def test_new_operator_plan_shapes(spark):
     """Round-2 operators keep the scale-critical plan shapes: the
     inverse-statement build broadcast-joins the inversion config; the
     search index is one partial-agg hash aggregation keyed by term; the
-    N-Triples export has no Python node; the zero-shuffle synthetic
-    documents path contains no Exchange."""
+    N-Triples export has no Python node."""
     from pyspark.sql import functions as F
 
     from sling_spark.kg.aggregates import search_index
     from sling_spark.kg.assets import seed_dataframes
     from sling_spark.kg.materialize import triples_to_ntriples
     from sling_spark.kg.reconcile import invert_statements
-    from sling_spark.sources.corpus import synthetic_documents
 
     seed = seed_dataframes(spark)
     items = seed["items"].withColumn("source_priority", F.lit(0))
@@ -142,10 +142,6 @@ def test_new_operator_plan_shapes(spark):
     nt_plan = formatted_plan(nt)
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in nt_plan
-
-    docs_plan = formatted_plan(synthetic_documents(spark, 100, partitions=2))
-    assert "Exchange" not in docs_plan  # zero-shuffle documents
-    assert "MapInPandas" in docs_plan  # generation is the one Python pass
 
 
 def test_jaccard_candidates_path_restricts_scan(spark):

@@ -6,10 +6,11 @@ from sling_spark import serving
 from sling_spark.kg.assets import seed_dataframes
 from sling_spark.kg.phrase_table import build_name_table, select_aliases
 from sling_spark.kg.pipeline import run_pipeline
+from sling_spark.sources.corpus import corpus_df
 
 
 def test_serving_lookups(spark):
-    res = run_pipeline(spark, n_files=40)
+    res = run_pipeline(spark, corpus_df(spark, 40))
     seed = seed_dataframes(spark)
     selected = select_aliases(seed["aliases"])
     serving.register_views(
@@ -42,7 +43,7 @@ def test_render_document_lex_and_html(spark):
     from sling_spark import serving
     from sling_spark.kg.pipeline import run_pipeline
 
-    res = run_pipeline(spark, n_files=30)
+    res = run_pipeline(spark, corpus_df(spark, 30))
     serving.register_views(
         spark, {"documents": res["documents"], "mentions": res["mentions"]}
     )

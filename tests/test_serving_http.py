@@ -17,11 +17,12 @@ from sling_spark.kg.assets import seed_dataframes
 from sling_spark.kg.phrase_table import build_name_table, select_aliases
 from sling_spark.kg.pipeline import run_pipeline
 from sling_spark.serving_http import make_kb_service
+from sling_spark.sources.corpus import corpus_df
 
 
 @pytest.fixture(scope="module")
 def kb_server(spark):
-    res = run_pipeline(spark, n_files=40)
+    res = run_pipeline(spark, corpus_df(spark, 40))
     seed = seed_dataframes(spark)
     name_table = build_name_table(select_aliases(seed["aliases"]))
     serving.register_views(

@@ -16,7 +16,7 @@ def _triple_set(df):
 
 def test_streaming_increments_match_batch(spark, tmp_path):
     from sling_spark.kg.assets import build_asset_store, seed_dataframes
-    from sling_spark.kg.documents import build_documents, latest_versions
+    from sling_spark.kg.documents import doc_stats, latest_versions, latest_with_sha
     from sling_spark.kg.mentions import annotate, relations_of
     from sling_spark.kg.relations import doc_triples
     from sling_spark.sources.corpus import corpus_df
@@ -41,8 +41,10 @@ def test_streaming_increments_match_batch(spark, tmp_path):
 
     # assets built from the FULL corpus documents (the commons KB is a
     # batch asset; streaming only annotates)
-    docs_full = build_documents(full)
-    store, _ = build_asset_store(spark, docs_full, str(tmp_path / "assets"), seed)
+    docs_full = latest_with_sha(full)
+    store, _ = build_asset_store(
+        spark, doc_stats(docs_full), str(tmp_path / "assets"), seed
+    )
 
     # increment 1
     stream = stream_triples(

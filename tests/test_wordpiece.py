@@ -82,7 +82,7 @@ def test_induced_vocab_round_trips_the_corpus(spark):
     from sling_spark.kg.documents import build_documents
     from sling_spark.sources.corpus import corpus_df
 
-    docs = build_documents(corpus_df(spark, 10, partitions=2), layout="tokens")
+    docs = build_documents(corpus_df(spark, 10, partitions=2))
     wf = sorted((r["word"], r["freq"]) for r in word_frequencies(docs).collect())
     vocab = [p for p, _f in build_wordpiece_vocab(wf, max_size=200)]
     tok = SubwordTokenizer(vocab, split_on_punctuation=False)

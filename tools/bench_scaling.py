@@ -28,6 +28,7 @@ def run_once(cores: int, n_files: int) -> dict:
 
     from sling_spark.kg.pipeline import run_pipeline
     from sling_spark.session import get_spark
+    from sling_spark.sources.corpus import corpus_df
 
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -43,7 +44,7 @@ def run_once(cores: int, n_files: int) -> dict:
     )
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
-    res = run_pipeline(spark, n_files=n_files, partitions=4 * cores)
+    res = run_pipeline(spark, corpus_df(spark, n_files, partitions=4 * cores))
     n_triples = res["triples"].count()
     wall = time.time() - t0
     n_docs = res["documents"].count()

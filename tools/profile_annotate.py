@@ -1,12 +1,13 @@
 """In-process cProfile of the annotate hot path (no Spark).
 
 The annotate stage is ~63% of kg_pipeline wall at 32 cores and is
-CPU-saturated (tools/profile_pipeline.py) — so reducing its per-doc CPU
-is a direct throughput gain at every core count. This script runs the
-exact per-batch work the mapInPandas closure does (tokenize →
-whole-batch candidate enumeration → per-doc DP/resolve/anaphora/
-relations) over N synthetic docs in one process and prints the top
-cumulative-time functions.
+CPU-saturated (per-layer spans of the real run_pipeline:
+``perfbench/run.py --workload build_bulk --trace 1``) — so reducing its
+per-doc CPU is a direct throughput gain at every core count. This
+script runs the exact per-batch work the mapInPandas closure does
+(tokenize → whole-batch candidate enumeration → per-doc DP/resolve/
+anaphora/relations) over N synthetic docs in one process and prints the
+top cumulative-time functions.
 
 Assets are assembled driver-side from the oracle/kb builders (values
 are test-asserted equal to the pipeline's Spark-built assets), so no

@@ -57,8 +57,9 @@ def main() -> None:
     seed = seed_dataframes(spark)
     if args.demo:
         from sling_spark.kg.pipeline import run_pipeline
+        from sling_spark.sources.corpus import corpus_df
 
-        res = run_pipeline(spark, n_files=args.n_files)
+        res = run_pipeline(spark, corpus_df(spark, args.n_files))
         tables = {
             "kb_items": res["kb_items"],
             "triples": res["triples"],

@@ -41,7 +41,8 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="synthetic corpus partitions when --corpus is absent")
     ap.add_argument("--asset-store", default=None,
                     help="worker-visible dir for the Parquet annotator "
                          "assets each worker loads once per process "
@@ -55,21 +56,21 @@ def main() -> None:
     )
     from sling_spark.kg.pipeline import run_pipeline
     from sling_spark.session import get_spark
+    from sling_spark.sources.corpus import corpus_df
     from sling_spark.sources.readers import corpus_from_table
 
     spark = get_spark(master=args.master, app_name="sling_spark_pipeline")
     t0 = time.time()
 
-    corpus = None
     if args.corpus:
         corpus = corpus_from_table(spark.read.parquet(args.corpus)).drop("content_sha")
+    else:
+        corpus = corpus_df(spark, args.n_files, partitions=args.partitions)
 
     res = run_pipeline(
         spark,
-        n_files=args.n_files,
-        corpus=corpus,
+        corpus,
         checkpoint_dir=args.checkpoint,
-        partitions=args.partitions,
         asset_store_dir=args.asset_store or f"{args.output}/_assets",
     )
     write_triples(res["triples"], f"{args.output}/triples")
